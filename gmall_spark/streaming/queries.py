@@ -85,7 +85,7 @@ def streaming_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(out, _name("s_visitor"))
 
 
-#: shared by the per-key entry and its key-coarsened (bucketed-state) twin
+#: shared by the per-key-layout entry and its key-group-layout twin
 _UV_ORACLE = f"""
     SELECT user_id,
            strftime(CAST(ts AS DATE), '%Y-%m-%d') AS dt,
@@ -101,9 +101,10 @@ _UV_ORACLE = f"""
 
 @register("streaming_unique_visit", _UV_ORACLE)
 def streaming_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST2 as keyed streaming state (applyInPandasWithState). NoTimeout state
-    emits in-batch, so the single-batch run equals the batch dedup exactly."""
-    out = run_to_memory(dedup_daily_stream(stream_events(spark, sf_dir)), _name("s_uv"), shuffle_partitions=stream_shuffle_width())
+    """ST2 as keyed streaming state (applyInPandasWithState), one state
+    group per user. NoTimeout state emits in-batch, so the single-batch run
+    equals the batch dedup exactly."""
+    out = run_to_memory(dedup_daily_stream(stream_events(spark, sf_dir), layout="per_key"), _name("s_uv"), shuffle_partitions=stream_shuffle_width())
     return out.select(
         "user_id", "dt", "first_event_id", F.date_format("first_ts", TS_FMT).alias("first_ts")
     )
@@ -119,8 +120,8 @@ def streaming_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_is_new_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST1 as keyed streaming state."""
-    return run_to_memory(fix_is_new_stream(stream_events(spark, sf_dir)), _name("s_isnew"), shuffle_partitions=stream_shuffle_width())
+    """ST1 as keyed streaming state, one state group per user."""
+    return run_to_memory(fix_is_new_stream(stream_events(spark, sf_dir), layout="per_key"), _name("s_isnew"), shuffle_partitions=stream_shuffle_width())
 
 
 @register(
@@ -274,9 +275,9 @@ _BOUNCE_ORACLE = f"""
 def streaming_bounce_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST3 — CEP-with-timeout via event-time timers. Match and in-batch
     timeout decisions emit immediately; trailing entries emit from the timer
-    only if the final watermark passes ts+600s."""
+    only if the final watermark passes ts+600s. One state group per user."""
     out = run_to_memory(
-        detect_bounce_stream(stream_events(spark, sf_dir)),
+        detect_bounce_stream(stream_events(spark, sf_dir), layout="per_key"),
         _name("s_bounce"),
         shuffle_partitions=stream_shuffle_width(),
     )
@@ -904,7 +905,7 @@ def streaming_mb_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_collect_batches(out)
 
 
-#: shared by the per-key mb entry and its key-coarsened twin
+#: shared by the per-key-layout mb entry and its key-group-layout twin
 _MB_IS_NEW_ORACLE = f"""
     WITH {_mb_cte()}
     SELECT event_id, user_id,
@@ -926,30 +927,28 @@ def streaming_mb_is_new(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_event_chunks,
     )
 
-    return run_collect_batches(fix_is_new_stream(stream_event_chunks(spark, sf_dir, 3)), shuffle_partitions=stream_shuffle_width())
+    return run_collect_batches(fix_is_new_stream(stream_event_chunks(spark, sf_dir, 3), layout="per_key"), shuffle_partitions=stream_shuffle_width())
 
 
 @register("streaming_mb_bucketed_is_new", _MB_IS_NEW_ORACLE)
 def streaming_mb_bucketed_is_new(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST1 with key-coarsened state across three micro-batches — the
-    bucketed-seen-set pattern (streaming_mb_bucketed_uv) applied to a
-    second operator, proving it generalizes: one array<long> of ever-seen
-    user ids per hash bucket, ~n_buckets Python calls per batch instead of
-    one per active user. Same oracle as streaming_mb_is_new, emit_batch
-    included — batch-for-batch identical emission."""
+    """ST1 across three micro-batches in the hash key-group layout: one
+    array<long> of ever-seen user ids per key group, one Python call per
+    group per batch instead of one per active user. Same kernel and oracle
+    as streaming_mb_is_new, emit_batch included — batch-for-batch identical
+    emission under either layout."""
     from gmall_spark.streaming.multibatch import (
         run_collect_batches,
         stream_event_chunks,
     )
-    from gmall_spark.streaming.stateful import fix_is_new_bucketed_stream
 
     return run_collect_batches(
-        fix_is_new_bucketed_stream(stream_event_chunks(spark, sf_dir, 3)),
+        fix_is_new_stream(stream_event_chunks(spark, sf_dir, 3)),
         shuffle_partitions=stream_shuffle_width(),
     )
 
 
-#: shared by the per-key mb entry and its key-coarsened twin
+#: shared by the per-key-layout mb entry and its key-group-layout twin
 _MB_UV_ORACLE = f"""
     WITH {_mb_cte()}
     SELECT user_id,
@@ -975,7 +974,7 @@ def streaming_mb_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_event_chunks,
     )
 
-    out = run_collect_batches(dedup_daily_stream(stream_event_chunks(spark, sf_dir, 3)), shuffle_partitions=stream_shuffle_width())
+    out = run_collect_batches(dedup_daily_stream(stream_event_chunks(spark, sf_dir, 3), layout="per_key"), shuffle_partitions=stream_shuffle_width())
     return out.select(
         "user_id",
         "dt",
@@ -987,18 +986,16 @@ def streaming_mb_unique_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_bucketed_uv", _UV_ORACLE)
 def streaming_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST2 with KEY-COARSENED state — the 100 TB shape of
+    """ST2 in the hash key-group layout — the 100 TB shape of
     streaming_unique_visit. applyInPandasWithState pays one Python call per
-    GROUP per batch, so per-entity keying costs a call per active user
-    (~300k/batch at sf10 — the measured bottleneck of the mb twin's 108 s
-    sf10 row, which no width knob fixes); grouping by hash(user)%buckets
-    with one int64-coded seen-set row per bucket makes the call count
-    independent of entity count. Same first-touch emission, same oracle —
-    the twin pair is the semantics proof."""
-    from gmall_spark.streaming.stateful import dedup_daily_bucketed_stream
-
+    GROUP per batch, so one group per user costs a call per active user
+    (~300k/batch at sf10 — the measured bottleneck of the mb entry's 108 s
+    sf10 row, which no width knob fixes); hashing users into key groups
+    with one int64-coded seen-set row per group makes the call count
+    independent of entity count. Same kernel, same oracle — the layout pair
+    is the invariance proof."""
     out = run_to_memory(
-        dedup_daily_bucketed_stream(stream_events(spark, sf_dir)),
+        dedup_daily_stream(stream_events(spark, sf_dir)),
         _name("s_bkt_uv"),
         shuffle_partitions=stream_shuffle_width(),
     )
@@ -1009,18 +1006,17 @@ def streaming_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_mb_bucketed_uv", _MB_UV_ORACLE)
 def streaming_mb_bucketed_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bucketed-state twin across three micro-batches: coarsened seen
-    sets must carry over chunk boundaries exactly like per-key state —
-    emit_batch equality against the per-key oracle proves batch-for-batch
-    identical emission, not just identical final output."""
+    """The key-group layout across three micro-batches: per-group seen sets
+    must carry over chunk boundaries exactly like per-key state — emit_batch
+    equality against the shared oracle proves batch-for-batch identical
+    emission, not just identical final output."""
     from gmall_spark.streaming.multibatch import (
         run_collect_batches,
         stream_event_chunks,
     )
-    from gmall_spark.streaming.stateful import dedup_daily_bucketed_stream
 
     out = run_collect_batches(
-        dedup_daily_bucketed_stream(stream_event_chunks(spark, sf_dir, 3)),
+        dedup_daily_stream(stream_event_chunks(spark, sf_dir, 3)),
         shuffle_partitions=stream_shuffle_width(),
     )
     return out.select(
@@ -1065,7 +1061,7 @@ def streaming_mb_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_collect_batches(ewma_stream(stream_event_chunks(spark, sf_dir, 3)), shuffle_partitions=stream_shuffle_width())
 
 
-#: shared by the per-key mb CEP entry and its key-coarsened (bucketed) twin
+#: shared by the per-key-layout mb CEP entry and its key-group-layout twin
 _MB_BOUNCE_ORACLE = f"""
     WITH {_mb_cte()},
     o AS (
@@ -1121,7 +1117,7 @@ def streaming_mb_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_event_chunks,
     )
 
-    out = run_collect_batches(detect_bounce_stream(stream_event_chunks(spark, sf_dir, 3)), shuffle_partitions=stream_shuffle_width())
+    out = run_collect_batches(detect_bounce_stream(stream_event_chunks(spark, sf_dir, 3), layout="per_key"), shuffle_partitions=stream_shuffle_width())
     return out.select(
         "event_id",
         "user_id",
@@ -1133,23 +1129,21 @@ def streaming_mb_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_mb_bucketed_bounce", _MB_BOUNCE_ORACLE)
 def streaming_mb_bucketed_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST3 with KEY-COARSENED state across three micro-batches — the
-    bucketed-seen-set pattern extended to the CEP operator, the first with
-    TIMERS: per-key pendings live as parallel arrays in one state row per
-    hash bucket, the per-key timers collapse to one min-deadline bucket
-    timer plus a watermark sweep on every invocation (the sweep must run on
-    the input path too — a bucket with input gets no timeout invocation
-    that batch, while per-key twins of its quiet keys would fire). Same
-    oracle as streaming_mb_bounce, emit_batch included — batch-for-batch
-    identical emission through both CEP emit paths."""
+    """ST3 across three micro-batches in the hash key-group layout — the
+    one key-group entry with TIMERS: per-key pendings live as parallel
+    arrays in one state row per group, the per-key timers collapse to one
+    min-deadline group timer plus a watermark sweep on every invocation
+    (the sweep must run on the input path too — a group with input gets no
+    timeout invocation that batch, while its quiet keys' timers are due).
+    Same kernel and oracle as streaming_mb_bounce, emit_batch included —
+    batch-for-batch identical emission through both CEP emit paths."""
     from gmall_spark.streaming.multibatch import (
         run_collect_batches,
         stream_event_chunks,
     )
-    from gmall_spark.streaming.stateful import detect_bounce_bucketed_stream
 
     out = run_collect_batches(
-        detect_bounce_bucketed_stream(stream_event_chunks(spark, sf_dir, 3)),
+        detect_bounce_stream(stream_event_chunks(spark, sf_dir, 3)),
         shuffle_partitions=stream_shuffle_width(),
     )
     return out.select(

@@ -6,30 +6,49 @@ everything else is declarative. Each mirrors its batch twin in
 operators/stateful.py (same outputs on the same fully-arrived data), and the
 tests assert exactly that equivalence.
 
-Scale notes:
-- State is partitioned by the entity key (mid/user_id) — same shuffle as the
-  batch window functions, RocksDB-backed state store at cluster scale
-  (spark.sql.streaming.stateStore.providerClass).
-- Event-time timeouts are watermark-driven: a key's timer fires when the
-  watermark passes it, which is Flink's event-time timer semantics
+One kernel per operator, over KEY GROUPS:
+- is_new repair (fix_is_new_stream), daily UV dedup (dedup_daily_stream)
+  and CEP bounce (detect_bounce_stream) are each ONE applyInPandasWithState
+  function. An invocation receives one key group's rows of a micro-batch
+  and handles all of the group's keys at once with vectorized pandas/numpy;
+  the group's state is one row of arrays (ever-seen ids, coded (key, day)
+  seen-sets, per-key pending entries).
+- The ``layout`` argument picks the grouping. ``"key_groups"`` (default,
+  the production topologies' layout) hashes the key into
+  4 × stream_shuffle_width() groups — Flink's key groups (Carbone et al.,
+  *State Management in Apache Flink*, VLDB'17) — so a micro-batch costs
+  that many Python invocations whatever the entity count.
+  ``"per_key"`` makes every key its own group: the degenerate layout,
+  one state row per entity like the reference's keyed ValueState. The
+  kernel is the same under both, so the layouts emit bit-identical rows
+  (the layout-invariance tests and the shared registry oracles).
+- Event-time timeouts are watermark-driven: a group's timer sits at its
+  minimum pending deadline, and every invocation sweeps the pendings the
+  watermark has passed — per key that is Flink's event-time timer
   (UserJumpDetailApp's CEP within(10s) timeout path).
-- Batches arrive unordered *between* micro-batches; per-key state carries the
+- Batches arrive unordered *between* micro-batches; state carries the
   ordering guarantee forward (the reference relies on Kafka per-partition
   order the same way).
-- Per-batch work is vectorized pandas (sort + shift), not per-row Python:
-  only the cross-batch carry (pending entry, seen-set) is scalar state.
+- State is RocksDB-backed at cluster scale
+  (spark.sql.streaming.stateStore.providerClass).
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
-from typing import Any
+from typing import Any, Literal
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.group import GroupedData
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+#: state layout of the keyed-state kernels — see the module docstring
+Layout = Literal["key_groups", "per_key"]
+
 
 def _batch_frame(
     pdfs: Iterator[pd.DataFrame], sort_cols: list[str] | None = None
@@ -40,15 +59,13 @@ def _batch_frame(
     Spark hands a group's rows as an iterator of Arrow-batch slices whose
     ORDER IS ARBITRARY: rows within a shuffle partition are clustered by
     key but not time-sorted, so a key whose rows straddle an Arrow-batch
-    boundary sees its later chunk first. The previous per-chunk
-    sort-then-carry pattern was therefore order-UNSOUND — it passed every
-    small-scale gate (groups rarely straddle a 10k-row Arrow batch there)
-    and lost 95 of 1,970,000 bounce rows in the first sf10 topology
-    verification (BENCH_r08_e2e_sf10_ab.json, the per-key arm; the
-    bucketed bounce twin already concatenated before sorting and matched
-    the oracle exactly). Memory: this buffers ONE group's batch slice —
-    bounded by a key's per-batch volume (per-entity keys: tens of rows)
-    or batch/n_buckets for the bucketed family, which already buffered.
+    boundary sees its later chunk first. A per-chunk sort-then-carry
+    pattern is therefore order-UNSOUND — it passed every small-scale gate
+    (groups rarely straddle a 10k-row Arrow batch there) and lost 95 of
+    1,970,000 bounce rows in the first sf10 topology verification
+    (BENCH_r08_e2e_sf10_ab.json, the per-key arm). Memory: this buffers ONE
+    group's batch slice — a key's per-batch volume under the per-key
+    layout, batch / number-of-groups under key groups.
 
     Returns None when the batch holds no rows for the group; the result has
     a fresh positional index (chunk concat repeats labels, and callers use
@@ -62,109 +79,223 @@ def _batch_frame(
     ).reset_index(drop=True)
 
 
-#: streaming source volume above which the production topologies dispatch
-#: the keyed operators to their bucketed twins — see use_bucketed_state.
-#: 64 MiB keeps every sf<=1 bench source on the faithful per-key shape
-#: (events.parquet is ~2 MB at sf0.1, ~20 MB at sf1) while sf10's ~220 MB
-#: source — and any production volume — takes the bucketed recipe.
-BUCKETED_STATE_MIN_BYTES = 64 << 20
+def _key_groups(events: DataFrame, key: str, layout: Layout) -> GroupedData:
+    """Group ``events`` for a keyed-state kernel: ``"key_groups"`` hashes
+    ``key`` into 4 × stream_shuffle_width() groups (state rows of ~thousands
+    of entries at bench scales while the call count stays in the hundreds;
+    state stays sharded across the shuffle partitions either way),
+    ``"per_key"`` groups by ``key`` itself."""
+    if layout == "per_key":
+        return events.groupBy(key)
+    if layout != "key_groups":
+        raise ValueError(f"unknown keyed-state layout {layout!r}")
+    from gmall_spark.session import stream_shuffle_width
+
+    n_groups = 4 * stream_shuffle_width()
+    return events.withColumn(
+        "_kg", F.pmod(F.xxhash64(F.col(key)), F.lit(n_groups))
+    ).groupBy("_kg")
 
 
-def use_bucketed_state(input_bytes: int | None) -> bool:
-    """Volume-based dispatch between the per-key keyed-state operators (the
-    faithful Flink analogs: one state row and one Python invocation per
-    entity) and their key-coarsened bucketed twins (the Python-scale
-    recipe, bit-exact emission equivalence asserted by the twin tests).
-
-    Why volume decides: applyInPandasWithState invokes the Python function
-    once per GROUP per micro-batch, so per-entity keying costs O(active
-    entities) interpreter crossings — the measured bottleneck at sf10
-    (220 MB/source): per-key 81-155 s vs bucketed 8.5-11.5 s on the same
-    entries (BENCH_r06_bucketed_state.json, AUDIT r7), while at sf0.1 the
-    two are within noise. The signal is the same pre-start source-size
-    estimate stream_jvm_state_width uses (pipelines._stream_input_bytes).
-
-    SPARK_GRAFT_BUCKETED_STATE=1/0 forces the choice regardless of volume —
-    the A/B and contended-host escape hatch."""
-    env = os.environ.get("SPARK_GRAFT_BUCKETED_STATE")
-    if env is not None:
-        return env.strip().lower() not in ("0", "false", "no", "")
-    return bool(input_bytes) and input_bytes >= BUCKETED_STATE_MIN_BYTES
+def _first_touch(uid: pd.Series, seen) -> pd.Series:
+    """is_new flags of a (ts, event_id)-sorted batch: True on each key's
+    first row in the batch unless ``seen`` already holds the key.
+    Restricted to one key, the batch order IS that key's event-time order,
+    so the flag marks the key's first-ever event."""
+    return ~uid.duplicated() & ~uid.isin(seen)
 
 
-def fix_is_new_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """ST1 — new/old-visitor repair (BaseLogApp.java:69-94): keyed ValueState
-    holding a seen-flag; the first event a key ever shows keeps is_new=1,
-    every later one is rewritten to 0. Emits (event_id, key, is_new)."""
+def fix_is_new_stream(
+    events: DataFrame, key: str = "user_id", layout: Layout = "key_groups"
+) -> DataFrame:
+    """ST1 — new/old-visitor repair (BaseLogApp.java:69-94): the first event
+    a key ever shows keeps is_new=1, every later one is rewritten to 0.
+    Emits (event_id, key, is_new).
 
+    State: the group's ever-seen key ids as one array<long> row — one int64
+    per ever-seen key, as the reference's per-key seen-flag keeps one row
+    per key forever (there is no horizon to trim). Each touched group's
+    array re-serializes every batch, so at ~1e9 keys a deployment raises
+    the group count with the key universe."""
     out_schema = f"event_id long, {key} long, is_new int"
-    state_schema = "seen int"
+    state_schema = "uids array<long>"
 
     def fn(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        seen = state.exists and state.get[0] == 1
-        # buffer + ONE global sort: the iterator's chunk order is Arrow
-        # batch order, NOT event-time order (found at sf10, where a key's
-        # rows straddle Arrow-batch boundaries and a per-chunk sort +
-        # carry flagged a later event as the first) — see _batch_frame
+        seen = set(state.get[0] or ()) if state.exists else set()
+        # one global sort (see _batch_frame): a key's first-EVER event must
+        # be the batch-wide (ts, event_id) minimum
         pdf = _batch_frame(pdfs)
         if pdf is not None:
-            flags = pd.Series(0, index=pdf.index, dtype="int32")
-            if not seen:
-                flags.iloc[0] = 1
-                seen = True
+            uid = pdf[key]
+            first = _first_touch(uid, seen)
+            seen.update(uid[first].tolist())
             yield pd.DataFrame(
-                {"event_id": pdf["event_id"], key: pdf[key], "is_new": flags}
+                {"event_id": pdf["event_id"], key: uid, "is_new": first.astype("int32")}
             )
-        state.update((1 if seen else 0,))
+        state.update((sorted(seen),))
 
-    return events.groupBy(key).applyInPandasWithState(
+    return _key_groups(events, key, layout).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
-def dedup_daily_stream(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """ST2 — daily UV dedup (UniqueVisitApp.java:45-87): keep each key's first
-    event per calendar day. State = seen-dates set (the reference's
-    ValueState<String> lastVisitDate with 24h TTL — TTL is the memory bound,
-    the date compare is the semantics; SURVEY §6a.6).
+def dedup_daily_stream(
+    events: DataFrame, key: str = "user_id", layout: Layout = "key_groups"
+) -> DataFrame:
+    """ST2 — daily UV dedup (UniqueVisitApp.java:45-87): keep each key's
+    first event per calendar day. Emits (key, dt, first_event_id, first_ts).
 
-    Emits (key, dt, first_event_id, first_ts)."""
+    State: the group's seen (key, day) pairs as one array<long> row of
+    codes key·2¹⁶ + epoch-day (day fits 16 bits until year 2149) — the
+    reference's ValueState<String> lastVisitDate; its 24h TTL is the memory
+    bound, the date compare is the semantics (SURVEY §6a.6). Within a group
+    the batch is sorted by (ts, event_id) and deduped per code, which
+    coincides with each key's own event-time order.
 
+    Retention: codes older than the group's max day − 1 are dropped. With
+    time-ordered arrival (the chunked sources here; Kafka per-partition
+    order in the reference) no new event can be older than that, so the
+    trim never changes emission — and a dormant key's dead days don't
+    linger."""
     out_schema = f"{key} long, dt string, first_event_id long, first_ts timestamp"
-    state_schema = "dates string"  # comma-joined seen dates (bounded: days in flight)
+    state_schema = "codes array<long>"
+    day_bits = 1 << 16
 
     def fn(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        seen = set((state.get[0] or "").split(",")) - {""} if state.exists else set()
-        # one global sort over the batch's chunks (see _batch_frame): the
-        # day's FIRST event must be the (ts, event_id) minimum of the whole
-        # batch, not of whichever Arrow chunk happened to arrive first
+        seen = set(state.get[0] or ()) if state.exists else set()
+        # one global sort (see _batch_frame): the day's FIRST event must be
+        # the batch-wide (ts, event_id) minimum, not the first Arrow chunk's
         pdf = _batch_frame(pdfs)
         if pdf is not None:
-            dt = pdf["ts"].dt.strftime("%Y-%m-%d")
-            firsts = pdf[(~dt.duplicated()) & (~dt.isin(seen))]
-            seen.update(dt[~dt.isin(seen)].unique())
-            if len(firsts):
+            day = pdf["ts"].to_numpy().astype("datetime64[D]").astype("int64")
+            code = pd.Series(pdf[key].to_numpy() * day_bits + day, index=pdf.index)
+            fresh = pdf[(~code.duplicated()) & (~code.isin(seen))]
+            seen.update(code.loc[fresh.index].tolist())
+            if len(fresh):
                 yield pd.DataFrame(
                     {
-                        key: firsts[key],
-                        "dt": dt.loc[firsts.index],
-                        "first_event_id": firsts["event_id"],
-                        "first_ts": firsts["ts"],
+                        key: fresh[key],
+                        "dt": fresh["ts"].dt.strftime("%Y-%m-%d"),
+                        "first_event_id": fresh["event_id"],
+                        "first_ts": fresh["ts"],
                     }
                 )
-        # bounded state — the reference's 24h TTL (UniqueVisitApp.java:55-59)
-        # as sliding retention: only the latest day and its predecessor can
-        # still receive (bounded-out-of-order) events, older dates are dead.
-        if len(seen) > 2:
-            seen = set(sorted(seen)[-2:])
-        state.update((",".join(sorted(seen)),))
+        if seen:
+            horizon = max(c % day_bits for c in seen) - 1
+            seen = {c for c in seen if c % day_bits >= horizon}
+        state.update((sorted(seen),))
 
-    return events.groupBy(key).applyInPandasWithState(
+    return _key_groups(events, key, layout).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
+
+
+_EMPTY = np.empty(0, dtype="int64")
+#: no pending entries: (keys, pending event ids, pending ts in epoch µs)
+_NO_PENDING = (_EMPTY, _EMPTY, _EMPTY)
+
+
+def _bounce_frame(key: str, eids, ks, ts_us, reason) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "event_id": pd.Series(eids, dtype="int64"),
+            key: pd.Series(ks, dtype="int64"),
+            "ts": pd.to_datetime(ts_us, unit="us"),
+            "bounce_reason": reason,
+        }
+    )
+
+
+def _bounce_step(
+    pdf: pd.DataFrame | None,
+    key: str,
+    entry_type: str,
+    timeout_secs: int,
+    pending: tuple[np.ndarray, np.ndarray, np.ndarray],
+    wm_ms: int,
+) -> tuple[list[pd.DataFrame], tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """One micro-batch of CEP bounce over a key group: ``pdf`` is the
+    group's batch sorted by (key, ts, event_id) or None, ``pending`` the
+    carried pending entries as aligned int64 arrays (key, event_id, ts µs).
+    Returns the emitted bounce frames and the new pending arrays.
+
+    - A carried pending whose key has rows resolves against the key's FIRST
+      batch event: timeout if the integer-µs gap exceeds the timeout, match
+      if that event is another entry.
+    - A carried pending whose key has no rows fires as a timeout iff
+      ``wm_ms > ms(ts) + timeout`` — the STRICTLY-beyond predicate Spark
+      applies when firing a per-key timer. The sweep runs on the input path
+      too: a group that receives any rows gets no timeout invocation that
+      batch, yet its quiet keys' timers are due.
+    - Within the batch, the batch twin's lead(): rows are key-sorted, so row
+      i+1 is the same key's next event iff the key doesn't change there.
+    - Each key's trailing entry becomes its new pending."""
+    ks, pids, ptsus = pending
+    tmo_us = timeout_secs * 1_000_000
+    if pdf is None:
+        kcol = ts_us = eid = _EMPTY
+        entry_m = np.zeros(0, dtype=bool)
+    else:
+        kcol = pdf[key].to_numpy(dtype="int64")
+        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
+        eid = pdf["event_id"].to_numpy(dtype="int64")
+        entry_m = pdf["event_type"].eq(entry_type).to_numpy()
+
+    # per-key first/last positions (rows are key-sorted; uniq ascends)
+    uniq, first_pos = np.unique(kcol, return_index=True)
+    last_pos = len(kcol) - 1 - np.unique(kcol[::-1], return_index=True)[1]
+
+    frames = []
+    present = np.isin(ks, uniq)
+    due = ~present & (wm_ms > ptsus // 1000 + timeout_secs * 1000)
+    if due.any():
+        frames.append(_bounce_frame(key, pids[due], ks[due], ptsus[due], "timeout"))
+    if present.any():
+        first = first_pos[np.searchsorted(uniq, ks[present])]
+        late = ts_us[first] - ptsus[present] > tmo_us
+        match = ~late & entry_m[first]
+        for mask, why in ((late, "timeout"), (match, "match")):
+            if mask.any():
+                frames.append(
+                    _bounce_frame(
+                        key, pids[present][mask], ks[present][mask],
+                        ptsus[present][mask], why,
+                    )
+                )
+    keep = ~present & ~due
+
+    n = len(kcol)
+    nxt_same = np.zeros(n, dtype=bool)
+    nxt_same[:-1] = kcol[1:] == kcol[:-1]
+    # zeros (not empty): the last element never survives the `decided`
+    # mask, but it still flows through the (nxt_ts - ts_us) subtraction —
+    # an uninitialized int64 there can trip numpy overflow warnings
+    nxt_ts = np.zeros(n, dtype="int64")
+    nxt_ts[:-1] = ts_us[1:]
+    nxt_entry = np.zeros(n, dtype=bool)
+    nxt_entry[:-1] = entry_m[1:]
+    decided = entry_m & nxt_same
+    t_hits = decided & ((nxt_ts - ts_us) > tmo_us)
+    hits = t_hits | (decided & nxt_entry)
+    if hits.any():
+        frames.append(
+            _bounce_frame(
+                key, eid[hits], kcol[hits], ts_us[hits],
+                np.where(t_hits[hits], "timeout", "match"),
+            )
+        )
+
+    # trailing entries are disjoint from the kept pendings (those keys have
+    # no rows in the batch)
+    l_entry = entry_m[last_pos]
+    return frames, (
+        np.concatenate([ks[keep], uniq[l_entry]]),
+        np.concatenate([pids[keep], eid[last_pos][l_entry]]),
+        np.concatenate([ptsus[keep], ts_us[last_pos][l_entry]]),
     )
 
 
@@ -174,97 +305,51 @@ def detect_bounce_stream(
     entry_type: str = "view",
     timeout_secs: int = 600,
     watermark: str = "2 seconds",
+    layout: Layout = "key_groups",
 ) -> DataFrame:
     """ST3 — CEP bounce detection with BOTH emit paths
     (UserJumpDetailApp.java:70-120): an entry event is a bounce if the next
     event is another entry (match path, emitted on arrival) or if no event
-    arrives within the timeout (timeout path, emitted by the event-time timer
-    — Flink's CEP timeout side-output).
+    arrives within the timeout (timeout path, emitted by the event-time
+    timer — Flink's CEP timeout side-output). Emits
+    (event_id, key, ts, bounce_reason).
 
-    Within a batch the decision is the batch twin's lead() logic, vectorized
-    (shift). Across batches: state carries the trailing pending entry, and an
-    event-time timer set to pending.ts + timeout emits the timeout-bounce
-    when the watermark passes with no follow-up. Emits
-    (event_id, key, ts, bounce_reason)."""
-
+    State: the group's pending trailing entries as three aligned arrays
+    (key, pending_id, pending_ts µs) in one row. The per-key event-time
+    timers become one group timer at the MIN pending deadline plus the
+    watermark sweep in _bounce_step, which every invocation (input or
+    timeout) runs; the decisions themselves are _bounce_step's."""
     out_schema = f"event_id long, {key} long, ts timestamp, bounce_reason string"
-    state_schema = "pending_id long, pending_ts timestamp"
-    cols = ["event_id", key, "ts", "bounce_reason"]
+    state_schema = "ks array<long>, pids array<long>, ptsus array<long>"
+    tmo_ms = timeout_secs * 1000
 
     def fn(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        k = key_tuple[0]
-        if state.hasTimedOut:
-            pid, pts = state.get
-            state.remove()
-            yield pd.DataFrame([(pid, k, pts, "timeout")], columns=cols)
-            return
-
-        pending = tuple(state.get) if state.exists else None
-        # global sort across chunks (see _batch_frame): the lead() logic
-        # below and the trailing-pending pick are only correct over the
-        # batch's true event-time order — per-chunk sorts concatenated in
-        # Arrow order lost mid-batch timeout bounces at sf10
-        pdf = _batch_frame(pdfs)
-        if pdf is None:
-            if pending is not None:
-                state.update(pending)
-                state.setTimeoutTimestamp(
-                    int(pending[1].timestamp() * 1000) + timeout_secs * 1000
-                )
-            return
-
-        # resolve the carried-over pending entry against the first new event
-        out_frames = []
-        first = pdf.iloc[0]
-        if pending is not None:
-            pid, pts = pending
-            gap = (first["ts"] - pts).total_seconds()
-            if gap > timeout_secs:
-                out_frames.append(pd.DataFrame([(pid, k, pts, "timeout")], columns=cols))
-            elif first["event_type"] == entry_type:
-                out_frames.append(pd.DataFrame([(pid, k, pts, "match")], columns=cols))
-
-        # vectorized lead() within the batch
-        is_entry = pdf["event_type"].eq(entry_type)
-        nxt_ts = pdf["ts"].shift(-1)
-        nxt_entry = is_entry.shift(-1)
-        gap_late = (nxt_ts - pdf["ts"]).dt.total_seconds() > timeout_secs
-        decided = is_entry & nxt_ts.notna()
-        reason = pd.Series(pd.NA, index=pdf.index, dtype="object")
-        reason[decided & gap_late] = "timeout"
-        reason[decided & ~gap_late & nxt_entry.fillna(False).astype(bool)] = "match"
-        hits = pdf[reason.notna()]
-        if len(hits):
-            out_frames.append(
-                pd.DataFrame(
-                    {
-                        "event_id": hits["event_id"],
-                        key: hits[key],
-                        "ts": hits["ts"],
-                        "bounce_reason": reason[reason.notna()],
-                    }
-                )
-            )
-
-        # trailing entry (no follow-up yet) becomes the new pending + timer
-        last = pdf.iloc[-1]
-        if last["event_type"] == entry_type:
-            state.update((int(last["event_id"]), last["ts"]))
-            state.setTimeoutTimestamp(
-                int(last["ts"].timestamp() * 1000) + timeout_secs * 1000
-            )
+        pending = (
+            tuple(np.asarray(a or (), dtype="int64") for a in state.get)
+            if state.exists
+            else _NO_PENDING
+        )
+        # global sort across chunks (see _batch_frame): the lead() logic and
+        # the trailing-pending pick hold only over true event-time order
+        pdf = None if state.hasTimedOut else _batch_frame(pdfs, [key, "ts", "event_id"])
+        frames, (ks, pids, ptsus) = _bounce_step(
+            pdf, key, entry_type, timeout_secs, pending, state.getCurrentWatermarkMs()
+        )
+        if len(ks):
+            order = np.argsort(ks, kind="stable")
+            ks, pids, ptsus = ks[order], pids[order], ptsus[order]
+            state.update((ks.tolist(), pids.tolist(), ptsus.tolist()))
+            state.setTimeoutTimestamp(int(ptsus.min()) // 1000 + tmo_ms)
         else:
             state.remove()
-        yield from out_frames
+        yield from frames
 
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
+    return _key_groups(
+        events.withWatermark("ts", watermark), key, layout
+    ).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
 
 
@@ -396,15 +481,16 @@ def gapfill_stream(
 
 def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
     """ST1 on the Spark 4 transformWithStateInPandas API: the same seen-flag
-    repair as fix_is_new_stream, but with typed per-key ValueState managed by
-    a StatefulProcessor — the closest structural analog to the reference's
-    Flink ValueState code (BaseLogApp.java:69-94), and the forward path for
-    new stateful operators (multiple typed state variables, timers, TTL are
-    first-class on this API).
+    repair as fix_is_new_stream (its _first_touch step), but with typed
+    per-key ValueState managed by a StatefulProcessor — the closest
+    structural analog to the reference's Flink ValueState code
+    (BaseLogApp.java:69-94), and the forward path for new stateful
+    operators (multiple typed state variables, timers, TTL are first-class
+    on this API).
 
     Requires `protobuf` (the TWS state-server protocol) — wired up from the
     image's gcloud-vendored runtime by compat.ensure_protobuf (see its
-    docstring); the applyInPandasWithState twins remain the default
+    docstring); the applyInPandasWithState kernels remain the default
     production path, and the equivalence test + the streaming_tws_is_new
     registry entry exercise this one."""
     try:
@@ -414,7 +500,6 @@ def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
             "transformWithStateInPandas needs the protobuf package; use "
             "fix_is_new_stream (applyInPandasWithState) in this environment"
         ) from exc
-    import pandas as pd
 
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -439,15 +524,17 @@ def fix_is_new_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
         def handleInputRows(self, key_tuple, rows, timerValues):
             seen = self.seen.exists() and self.seen.get()[0] == 1
             # one global sort across the TWS chunk iterator — same
-            # order-soundness contract as the GroupState twins
+            # order-soundness contract as the GroupState kernels
             pdf = _batch_frame(rows)
             if pdf is not None:
-                flags = pd.Series(0, index=pdf.index, dtype="int32")
-                if not seen:
-                    flags.iloc[0] = 1
-                    seen = True
+                first = _first_touch(pdf[key], key_tuple if seen else ())
+                seen = True
                 yield pd.DataFrame(
-                    {"event_id": pdf["event_id"], key: pdf[key], "is_new": flags}
+                    {
+                        "event_id": pdf["event_id"],
+                        key: pdf[key],
+                        "is_new": first.astype("int32"),
+                    }
                 )
             self.seen.update((1 if seen else 0,))
 
@@ -479,11 +566,11 @@ def detect_bounce_tws(
     detect_bounce_stream (UserJumpDetailApp.java:70-120), but the timeout
     path runs on FIRST-CLASS event-time timers (handle.registerTimer /
     handleExpiredTimer) instead of applyInPandasWithState's single implicit
-    timeout slot. Semantics are identical — match and in-batch timeout
-    decisions emit from handleInputRows; a trailing entry parks one
-    (pending_id, pending_ts) pair in ValueState with a timer at
-    ms-floor(ts)+timeout, and handleExpiredTimer emits the timeout bounce
-    when the watermark passes it.
+    timeout slot. The decisions are _bounce_step's, run over the key's own
+    rows — match and in-batch timeout decisions emit from handleInputRows;
+    a trailing entry parks one (pending_id, pending_ts) pair in ValueState
+    with a timer at ms-floor(ts)+timeout, and handleExpiredTimer emits the
+    timeout bounce when the watermark passes it.
 
     Why this twin exists: timers are where TWS earns its keep over the
     GroupState API (many per key, listable, deletable — a key replacing its
@@ -540,66 +627,35 @@ def detect_bounce_tws(
             for t in self.handle.listTimers():
                 self.handle.deleteTimer(t)
 
-        def _park(self, event_id: int, ts: pd.Timestamp) -> None:
-            us = int(ts.value // 1_000)
+        def _park(self, event_id: int, us: int) -> None:
             for t in self.handle.listTimers():
                 self.handle.deleteTimer(t)
-            self.pending.update((int(event_id), us))
+            self.pending.update((event_id, us))
             self.handle.registerTimer(us // 1000 + timeout_ms)
 
         def handleInputRows(self, key_tuple, rows, timerValues):
-            k = key_tuple[0]
             # global sort across chunks (see _batch_frame) — per-chunk
             # sorts concatenated in Arrow order lost mid-batch timeouts
             pdf = _batch_frame(rows)
             if pdf is None:
                 return
-
-            out_frames = []
-            # resolve the carried-over pending entry against the first new
-            # event — the event-time gap decides before any watermark does
+            pending = _NO_PENDING
             if self.pending.exists():
                 pid, pus = self.pending.get()
-                pts = pd.Timestamp(pus * 1_000)
-                gap = (pdf.iloc[0]["ts"] - pts).total_seconds()
-                if gap > timeout_secs:
-                    out_frames.append(
-                        pd.DataFrame([(pid, k, pts, "timeout")], columns=cols)
-                    )
-                elif pdf.iloc[0]["event_type"] == entry_type:
-                    out_frames.append(
-                        pd.DataFrame([(pid, k, pts, "match")], columns=cols)
-                    )
-
-            # vectorized lead() within the batch — identical to the
-            # applyInPandasWithState twin
-            is_entry = pdf["event_type"].eq(entry_type)
-            nxt_ts = pdf["ts"].shift(-1)
-            nxt_entry = is_entry.shift(-1)
-            gap_late = (nxt_ts - pdf["ts"]).dt.total_seconds() > timeout_secs
-            decided = is_entry & nxt_ts.notna()
-            reason = pd.Series(pd.NA, index=pdf.index, dtype="object")
-            reason[decided & gap_late] = "timeout"
-            reason[decided & ~gap_late & nxt_entry.fillna(False).astype(bool)] = "match"
-            hits = pdf[reason.notna()]
-            if len(hits):
-                out_frames.append(
-                    pd.DataFrame(
-                        {
-                            "event_id": hits["event_id"],
-                            key: hits[key],
-                            "ts": hits["ts"],
-                            "bounce_reason": reason[reason.notna()],
-                        }
-                    )
+                pending = tuple(
+                    np.array([v], dtype="int64") for v in (key_tuple[0], pid, pus)
                 )
-
-            last = pdf.iloc[-1]
-            if last["event_type"] == entry_type:
-                self._park(last["event_id"], last["ts"])
+            # the key's pending resolves against its first new event — the
+            # event-time gap decides before any watermark does
+            frames, (ks, pids, ptsus) = _bounce_step(
+                pdf, key, entry_type, timeout_secs, pending,
+                timerValues.getCurrentWatermarkInMs(),
+            )
+            if len(ks):
+                self._park(int(pids[0]), int(ptsus[0]))
             else:
                 self._clear()
-            yield from out_frames
+            yield from frames
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             # (named ``key``: the engine invokes this hook with keyword
@@ -633,349 +689,5 @@ def detect_bounce_tws(
             outputStructType=out_schema,
             outputMode="append",
             timeMode="eventTime",
-        )
-    )
-
-
-def dedup_daily_bucketed_stream(
-    events: DataFrame, key: str = "user_id", n_buckets: int | None = None
-) -> DataFrame:
-    """ST2 with KEY-COARSENED state — the 100 TB shape of dedup_daily_stream.
-
-    applyInPandasWithState invokes the Python function once per GROUP per
-    micro-batch, so keying state by the raw entity id costs one Python call
-    per active entity (~300k calls/batch at sf10 — measured as the dominant
-    cost of streaming_mb_unique_visit's 108 s sf10 row; the width A/B in
-    BENCH_r06_sf10_streaming.json showed no knob fixes it because the calls,
-    not the partitions, are the bottleneck). This twin groups by
-    hash(key) % n_buckets instead and keeps each bucket's seen set as ONE
-    state row of int64 codes (user·2¹⁶ + epoch-day — day fits 16 bits until
-    year 2149), so a batch pays n_buckets Python calls total, independent of
-    the entity count. Semantics are IDENTICAL to the per-key twin (same
-    first-touch-per-(user, day) emission in the same micro-batch, asserted
-    bit-exact by the equivalence test and the shared oracle): within a
-    bucket the batch is sorted by (ts, event_id) and deduped per code, which
-    coincides with each user's own event-time order.
-
-    Retention mirrors the per-key twin's two-day window, but bounded by the
-    bucket's MAX day rather than per user (codes older than max-1 day are
-    dropped): with time-ordered arrival (the chunked sources here; Kafka
-    per-partition order in the reference) no new event can be older than
-    that, so the trim is emission-invariant — and it is the stronger memory
-    bound, because a dormant user's dead days don't linger.
-
-    The trade: per-bucket state rows are wider (the whole seen set
-    serializes through Arrow every batch instead of one tiny row per
-    touched key). n_buckets controls that balance — default 4× the pandas
-    width, keeping rows ~thousands of codes at bench scales while the call
-    count stays in the hundreds. Flink has no analog knob (its keyed state
-    is JVM-side per-key with no per-group invocation cost); this is a
-    Python-runtime-specific scale technique, which is exactly why it gets
-    its own registry entry instead of replacing the faithful per-key twin.
-    """
-    from pyspark.sql import functions as F
-
-    from gmall_spark.session import stream_shuffle_width
-
-    if n_buckets is None:
-        n_buckets = 4 * stream_shuffle_width()
-
-    out_schema = f"{key} long, dt string, first_event_id long, first_ts timestamp"
-    state_schema = "codes array<long>"
-    _DAY_BITS = 1 << 16
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = set(state.get[0] or ()) if state.exists else set()
-        # global sort across chunks (see _batch_frame): within a bucket the
-        # per-(user, day) FIRST must be the batch-wide (ts, event_id) min
-        pdf = _batch_frame(pdfs)
-        if pdf is not None:
-            day = pdf["ts"].to_numpy().astype("datetime64[D]").astype("int64")
-            code = pd.Series(
-                pdf[key].to_numpy() * _DAY_BITS + day, index=pdf.index
-            )
-            fresh = pdf[(~code.duplicated()) & (~code.isin(seen))]
-            seen.update(code.loc[fresh.index].tolist())
-            if len(fresh):
-                yield pd.DataFrame(
-                    {
-                        key: fresh[key],
-                        "dt": fresh["ts"].dt.strftime("%Y-%m-%d"),
-                        "first_event_id": fresh["event_id"],
-                        "first_ts": fresh["ts"],
-                    }
-                )
-        if seen:
-            horizon = max(c % _DAY_BITS for c in seen) - 1
-            seen = {c for c in seen if c % _DAY_BITS >= horizon}
-        state.update((sorted(seen),))
-
-    return (
-        events.withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def detect_bounce_bucketed_stream(
-    events: DataFrame,
-    key: str = "user_id",
-    entry_type: str = "view",
-    timeout_secs: int = 600,
-    watermark: str = "2 seconds",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """ST3 with KEY-COARSENED state — the bucketed-seen-set pattern
-    (dedup_daily_bucketed_stream) extended to the CEP operator, the first
-    of the family that needs TIMERS: per-key pending entries live as three
-    parallel arrays (key, pending_id, pending_ts-micros) in ONE state row
-    per hash bucket, so a micro-batch costs n_buckets Python invocations
-    instead of one per active entity (the measured bottleneck of
-    streaming_mb_bounce's 140-228 s sf10 rows).
-
-    The per-key event-time timer becomes one bucket timer at the MIN
-    pending deadline plus an explicit watermark sweep: every invocation
-    (input or timeout) emits exactly the pendings with
-    ``watermark > ms(ts) + timeout`` — the same STRICTLY-beyond predicate
-    Spark applies when firing the per-key twin's timers, read from
-    ``state.getCurrentWatermarkMs()``. The sweep must run on the INPUT path
-    too: a bucket that receives any event is not eligible for a timeout
-    invocation that batch, yet per-key twins of its OTHER keys would fire —
-    without the sweep those emissions arrive a batch late and the
-    emit_batch equivalence breaks.
-
-    In-batch decisions are the per-key twin's vectorized lead() logic run
-    per key via groupby shifts (sort by (key, ts, event_id)); carried
-    pendings resolve against each key's FIRST batch event with the same
-    integer-microsecond gap comparison; each key's trailing entry becomes
-    its new pending. Bit-exact emission equivalence against
-    detect_bounce_stream — batch-for-batch, both emit paths — is asserted
-    by the twin test and the shared multi-batch oracle."""
-    from pyspark.sql import functions as F
-
-    from gmall_spark.session import stream_shuffle_width
-
-    if n_buckets is None:
-        n_buckets = 4 * stream_shuffle_width()
-
-    out_schema = f"event_id long, {key} long, ts timestamp, bounce_reason string"
-    state_schema = "ks array<long>, pids array<long>, ptsus array<long>"
-    cols = ["event_id", key, "ts", "bounce_reason"]
-    tmo_ms = timeout_secs * 1000
-    tmo_us = timeout_secs * 1_000_000
-
-    import numpy as np
-
-    _EMPTY = np.empty(0, dtype="int64")
-
-    def _load(state: GroupState):
-        # state as three aligned int64 arrays (key, pending_id, pending_ts µs)
-        if not state.exists:
-            return _EMPTY, _EMPTY, _EMPTY
-        ks, pids, ptsus = state.get
-        return (
-            np.asarray(ks or (), dtype="int64"),
-            np.asarray(pids or (), dtype="int64"),
-            np.asarray(ptsus or (), dtype="int64"),
-        )
-
-    def _frame(pids, ks, ptsus, reason) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series(pids, dtype="int64"),
-                key: pd.Series(ks, dtype="int64"),
-                "ts": pd.to_datetime(ptsus, unit="us"),
-                "bounce_reason": reason,
-            }
-        )
-
-    def _store(state: GroupState, ks, pids, ptsus) -> None:
-        if len(ks):
-            order = np.argsort(ks, kind="stable")
-            ks, pids, ptsus = ks[order], pids[order], ptsus[order]
-            state.update((ks.tolist(), pids.tolist(), ptsus.tolist()))
-            state.setTimeoutTimestamp(int(ptsus.min()) // 1000 + tmo_ms)
-        else:
-            state.remove()
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ks, pids, ptsus = _load(state)
-        wm_ms = state.getCurrentWatermarkMs()
-        chunks = None if state.hasTimedOut else [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            # timeout invocation, or an input invocation with no rows:
-            # fire every pending the watermark has passed
-            due = wm_ms > (ptsus // 1000 + tmo_ms)
-            frame = _frame(pids[due], ks[due], ptsus[due], "timeout") if due.any() else None
-            keep = ~due
-            _store(state, ks[keep], pids[keep], ptsus[keep])
-            if frame is not None:
-                yield frame
-            return
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        # positional index: chunk concat repeats labels, and the array
-        # lookups below assume index == position
-        pdf = pdf.sort_values([key, "ts", "event_id"], kind="mergesort").reset_index(drop=True)
-        kcol = pdf[key].to_numpy()
-        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-        eid = pdf["event_id"].to_numpy()
-        entry_m = pdf["event_type"].eq(entry_type).to_numpy()
-
-        # per-key first/last positions (rows are key-sorted; uniq ascends)
-        uniq, first_pos = np.unique(kcol, return_index=True)
-        last_pos = len(kcol) - 1 - np.unique(kcol[::-1], return_index=True)[1]
-
-        out_frames = []
-        # classify carried pendings: present keys resolve against their
-        # FIRST batch event; absent keys whose deadline the watermark passed
-        # fire here — their per-key twins' timers fire this batch, but this
-        # bucket got input so no timeout invocation comes (see docstring)
-        if len(ks):
-            idx = np.searchsorted(uniq, ks)
-            present = uniq[np.minimum(idx, len(uniq) - 1)] == ks
-            absent_due = (~present) & (wm_ms > ptsus // 1000 + tmo_ms)
-            if absent_due.any():
-                out_frames.append(
-                    _frame(pids[absent_due], ks[absent_due], ptsus[absent_due], "timeout")
-                )
-            if present.any():
-                pi = idx[present]
-                gap = ts_us[first_pos[pi]] - ptsus[present]
-                t_m = gap > tmo_us
-                m_m = (~t_m) & entry_m[first_pos[pi]]
-                for mask, why in ((t_m, "timeout"), (m_m, "match")):
-                    if mask.any():
-                        out_frames.append(
-                            _frame(
-                                pids[present][mask],
-                                ks[present][mask],
-                                ptsus[present][mask],
-                                why,
-                            )
-                        )
-            keep = (~present) & (~absent_due)
-        else:
-            keep = np.zeros(0, dtype=bool)
-
-        # vectorized lead() per key within the batch: rows are sorted by
-        # (key, ts, event_id), so row i+1 is the same key's next event iff
-        # the key doesn't change there
-        n = len(kcol)
-        nxt_same = np.zeros(n, dtype=bool)
-        nxt_same[:-1] = kcol[1:] == kcol[:-1]
-        # zeros (not empty): the last element never survives the `decided`
-        # mask, but it still flows through the (nxt_ts - ts_us) subtraction —
-        # an uninitialized int64 there can trip numpy overflow warnings
-        nxt_ts = np.zeros(n, dtype="int64")
-        nxt_ts[:-1] = ts_us[1:]
-        nxt_entry = np.zeros(n, dtype=bool)
-        nxt_entry[:-1] = entry_m[1:]
-        decided = entry_m & nxt_same
-        t_hits = decided & ((nxt_ts - ts_us) > tmo_us)
-        m_hits = decided & ~t_hits & nxt_entry
-        hits = t_hits | m_hits
-        if hits.any():
-            out_frames.append(
-                pd.DataFrame(
-                    {
-                        "event_id": eid[hits],
-                        key: kcol[hits],
-                        "ts": pdf["ts"].to_numpy()[hits],
-                        "bounce_reason": np.where(t_hits[hits], "timeout", "match"),
-                    }
-                )
-            )
-
-        # each key's trailing entry becomes its new pending (disjoint from
-        # the kept pendings — those keys are absent from the batch)
-        l_entry = entry_m[last_pos]
-        _store(
-            state,
-            np.concatenate([ks[keep], uniq[l_entry]]),
-            np.concatenate([pids[keep], eid[last_pos][l_entry]]),
-            np.concatenate([ptsus[keep], ts_us[last_pos][l_entry]]),
-        )
-        yield from out_frames
-
-    return (
-        events.withWatermark("ts", watermark)
-        .withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-def fix_is_new_bucketed_stream(
-    events: DataFrame, key: str = "user_id", n_buckets: int | None = None
-) -> DataFrame:
-    """ST1 with KEY-COARSENED state — dedup_daily_bucketed_stream's pattern
-    applied to the is_new repair, proving the technique generalizes beyond
-    one operator: group by hash(key) % n_buckets and keep the bucket's
-    ever-seen key ids as one array<long> state row, so a micro-batch costs
-    n_buckets Python invocations instead of one per active entity (the
-    measured bottleneck of the per-key twins at sf10 — see
-    BENCH_r06_bucketed_state.json).
-
-    Emission is identical to fix_is_new_stream: within a bucket the batch
-    is sorted by (ts, event_id), and a key's first-ever event (first
-    occurrence in batch AND not in the seen set) keeps is_new=1. Restricted
-    to one key, the bucket's sort order IS that key's event-time order, so
-    first-occurrence coincides per key.
-
-    State volume equals the per-key twin's (one int64 per ever-seen key
-    either way — there is no two-day horizon to trim here, exactly like the
-    per-key version whose store keeps one row per key forever); the
-    re-packing trades per-group invocation cost for re-serializing each
-    TOUCHED bucket's array every batch. n_buckets is the balance knob: at
-    ~1e9 keys per bucket-arrays would be ~30 MB at the default, so a
-    cluster deployment raises n_buckets with the key universe (state stays
-    sharded across width partitions regardless)."""
-    from pyspark.sql import functions as F
-
-    from gmall_spark.session import stream_shuffle_width
-
-    if n_buckets is None:
-        n_buckets = 4 * stream_shuffle_width()
-
-    out_schema = f"event_id long, {key} long, is_new int"
-    state_schema = "uids array<long>"
-
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = set(state.get[0] or ()) if state.exists else set()
-        # global sort across chunks (see _batch_frame): within a bucket a
-        # key's first-EVER event must be the batch-wide (ts, event_id) min
-        pdf = _batch_frame(pdfs)
-        if pdf is not None:
-            uid = pdf[key]
-            first = (~uid.duplicated()) & (~uid.isin(seen))
-            seen.update(uid[first].tolist())
-            yield pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"],
-                    key: uid,
-                    "is_new": first.astype("int32"),
-                }
-            )
-        state.update((sorted(seen),))
-
-    return (
-        events.withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
     )

@@ -1,11 +1,13 @@
-"""Round-8 unit tests: bench re-measure gate, scratch auto-root, bucketed
-dispatch, the float32-prefilter candidate helper, and LPA vote packing.
+"""Round-8 unit tests: bench re-measure gate, scratch auto-root, the
+float32-prefilter candidate helper, and LPA vote packing.
 
 All pure-Python/numpy — no SparkSession needed (the Spark-side behavior of
 the touched operators is covered by the oracle-parity gate and the existing
 twin tests)."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
@@ -59,22 +61,6 @@ def test_scratch_env_override_wins(monkeypatch, tmp_path):
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     assert s.scratch_dir("x").startswith(str(tmp_path))
-
-
-# ---------------------------------------------------------------------------
-# streaming: volume-based bucketed-state dispatch
-# ---------------------------------------------------------------------------
-def test_use_bucketed_state_threshold_and_override(monkeypatch):
-    from gmall_spark.streaming import stateful
-
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_STATE", raising=False)
-    assert not stateful.use_bucketed_state(None)
-    assert not stateful.use_bucketed_state(2 << 20)  # sf0.1-ish
-    assert stateful.use_bucketed_state(220 << 20)  # sf10-ish
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_STATE", "1")
-    assert stateful.use_bucketed_state(0)
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_STATE", "0")
-    assert not stateful.use_bucketed_state(1 << 40)
 
 
 # ---------------------------------------------------------------------------
@@ -150,7 +136,8 @@ def test_lpa_pack_roundtrip_bounds():
 # concat-then-sort (stateful._batch_frame), never sort-per-chunk-and-carry.
 # Forcing 4-row Arrow batches makes nearly every group straddle chunks at
 # sf0.001 — under the old per-chunk pattern these entries lose/misplace
-# rows and the oracle catches it.
+# rows and the oracle catches it. The *_bucketed_* entries run the same
+# kernels in the hash key-group layout, where a group holds many keys.
 # ---------------------------------------------------------------------------
 import pytest as _pytest
 
@@ -164,6 +151,7 @@ import pytest as _pytest
         "streaming_mb_ewma",
         "streaming_mb_bucketed_uv",
         "streaming_mb_bucketed_is_new",
+        "streaming_mb_bucketed_bounce",
     ],
 )
 def test_keyed_state_chunk_order_soundness(spark, entry):
@@ -291,3 +279,60 @@ def test_quiesce_listener_streak_accounting():
     # reset() is the caller's re-arm between belt-check failures
     w.reset()
     assert w.min_streak() == 0
+
+
+def test_drain_surfaces_query_terminated_after_streaks_met():
+    """A query that terminates AFTER every idle streak is met must fail the
+    drain: its last progress still reads as quiet (no input rows, no active
+    trigger), so the belt check alone would declare quiescence."""
+    from types import SimpleNamespace
+
+    from gmall_spark.streaming.topology import _IDLE_STREAK, _drain
+
+    queries = [
+        SimpleNamespace(
+            runId=rid,
+            lastProgress={"numInputRows": 0},
+            status={"isTriggerActive": False},
+        )
+        for rid in ("r1", "r2")
+    ]
+
+    class FakeStreams:
+        removed = None
+
+        def addListener(self, listener):
+            # every query reaches its streak, then r2 dies
+            for _ in range(_IDLE_STREAK):
+                for q in queries:
+                    listener.onQueryIdle(SimpleNamespace(runId=q.runId))
+            listener.onQueryTerminated(SimpleNamespace(runId="r2", exception="boom"))
+
+        def removeListener(self, listener):
+            self.removed = listener
+
+    spark = SimpleNamespace(streams=FakeStreams())
+    with pytest.raises(RuntimeError, match="r2 terminated during drain: boom"):
+        _drain(queries, 0.01, 5.0, spark=spark)
+    assert spark.streams.removed is not None
+
+
+def test_sentinels_sort_after_every_chunk(tmp_path):
+    """Sentinel mtimes derive from the last copied chunk's mtime, so A and B
+    sort after every chunk (and A before B) at any chunk count — 12 chunks
+    span 110 s of mtimes, past the old fixed base + 100 s sentinel slot."""
+    from datetime import datetime
+
+    from gmall_spark.streaming.topology import _copy_chunks, _write_sentinel
+
+    shared, src = tmp_path / "shared", tmp_path / "src"
+    shared.mkdir()
+    src.mkdir()
+    for i in range(12):
+        (shared / f"part-{i:03d}.parquet").write_bytes(b"x")
+    last = _copy_chunks(str(shared), str(src))
+    for order, tag in enumerate(("a", "b")):
+        _write_sentinel(str(src), tag, datetime(2024, 1, 1), order, last)
+    by_mtime = sorted(os.listdir(src), key=lambda f: os.stat(src / f).st_mtime)
+    assert by_mtime[-2:] == ["zz_sentinel_a.parquet", "zz_sentinel_b.parquet"]
+    assert len({os.stat(src / f).st_mtime for f in by_mtime}) == 14

@@ -710,54 +710,54 @@ def test_dynamic_session_window_state_bounded(spark):
     )
 
 
-def test_dedup_daily_bucketed_matches_per_key(spark, chunked_events):
-    """The key-coarsened (bucketed-state) dedup must be BIT-identical to the
-    per-key twin on the same chunk schedule — same (user, day) firsts, same
-    rows, carried across batch boundaries by the coded seen-sets exactly as
-    per-key state carries its date strings. (The registry's mb entry
-    additionally pins emit_batch equality through the shared oracle.)"""
-    from gmall_spark.streaming.stateful import dedup_daily_bucketed_stream
+def _layout_rows(spark, chunked_events, op, name, cols):
+    """Run one keyed-state kernel over the same chunk schedule in both
+    state layouts; returns (key-group rows, per-key rows)."""
+    return tuple(
+        rows_set(
+            run_to_memory(
+                op(read_stream(spark, chunked_events), layout=layout),
+                f"{name}_{layout}",
+            ),
+            cols,
+        )
+        for layout in ("key_groups", "per_key")
+    )
 
-    cols = ["user_id", "dt", "first_event_id", "first_ts"]
-    per_key = run_to_memory(
-        dedup_daily_stream(read_stream(spark, chunked_events)), "t_uv_pk"
+
+def test_dedup_daily_bucketed_matches_per_key(spark, chunked_events):
+    """Layout invariance of the daily-UV kernel: hash key groups and one
+    group per key must give BIT-identical rows — same (user, day) firsts,
+    carried across batch boundaries by the coded seen-sets whether a state
+    row holds one user or many. (The registry's mb entry pair additionally
+    pins emit_batch equality through the shared oracle.)"""
+    groups, per_key = _layout_rows(
+        spark, chunked_events, dedup_daily_stream, "t_uv",
+        ["user_id", "dt", "first_event_id", "first_ts"],
     )
-    bucketed = run_to_memory(
-        dedup_daily_bucketed_stream(read_stream(spark, chunked_events)), "t_uv_bk"
-    )
-    assert rows_set(bucketed, cols) == rows_set(per_key, cols)
+    assert groups == per_key
 
 
 def test_detect_bounce_bucketed_matches_per_key(spark, chunked_events):
-    """The key-coarsened CEP bounce (bucketed pending-map state + one
-    min-deadline timer per bucket with a watermark sweep) must be
-    bit-identical to the per-key twin on the same chunk schedule — BOTH
-    emit paths: in-batch match/timeout, cross-batch pending resolution,
-    and timer-fired timeouts. (The registry's mb entry additionally pins
-    emit_batch equality through the shared oracle.)"""
-    from gmall_spark.streaming.stateful import detect_bounce_bucketed_stream
-
-    cols = ["event_id", "user_id", "ts", "bounce_reason"]
-    per_key = run_to_memory(
-        detect_bounce_stream(read_stream(spark, chunked_events)), "t_bn_pk"
+    """Layout invariance of the CEP bounce kernel: the group timer at the
+    min pending deadline plus the watermark sweep must fire exactly what
+    per-key timers fire — bit-identical rows on BOTH emit paths: in-batch
+    match/timeout, cross-batch pending resolution, and timer-fired
+    timeouts. (The registry's mb entry pair additionally pins emit_batch
+    equality through the shared oracle.)"""
+    groups, per_key = _layout_rows(
+        spark, chunked_events, detect_bounce_stream, "t_bn",
+        ["event_id", "user_id", "ts", "bounce_reason"],
     )
-    bucketed = run_to_memory(
-        detect_bounce_bucketed_stream(read_stream(spark, chunked_events)), "t_bn_bk"
-    )
-    assert rows_set(bucketed, cols) == rows_set(per_key, cols)
+    assert groups == per_key
 
 
 def test_fix_is_new_bucketed_matches_per_key(spark, chunked_events):
-    """The bucketed-seen-set is_new repair must be bit-identical to the
-    per-key twin on the same chunk schedule — the pattern-generalization
-    proof (same contract as the bucketed dedup test above)."""
-    from gmall_spark.streaming.stateful import fix_is_new_bucketed_stream
-
-    cols = ["event_id", "user_id", "is_new"]
-    per_key = run_to_memory(
-        fix_is_new_stream(read_stream(spark, chunked_events)), "t_in_pk"
+    """Layout invariance of the is_new kernel: a group's ever-seen id set
+    must flag the same first-ever events whether it holds one user or
+    many."""
+    groups, per_key = _layout_rows(
+        spark, chunked_events, fix_is_new_stream, "t_in",
+        ["event_id", "user_id", "is_new"],
     )
-    bucketed = run_to_memory(
-        fix_is_new_bucketed_stream(read_stream(spark, chunked_events)), "t_in_bk"
-    )
-    assert rows_set(bucketed, cols) == rows_set(per_key, cols)
+    assert groups == per_key

@@ -26,13 +26,12 @@ import os
 import time
 from datetime import timedelta
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from gmall_spark.operators.stateful import dedup_daily, detect_bounce
 from gmall_spark.sources import load_table
 from gmall_spark.streaming.stateful import dedup_daily_stream, detect_bounce_stream
-from gmall_spark.streaming.topology import _drain
+from gmall_spark.streaming.topology import _drain, _write_sentinel
 
 SF = "/root/testdata/sf0.001"
 N_CHUNKS = 4
@@ -60,31 +59,16 @@ def _write_chunks(spark, src):
         )
         os.utime(p, (mtime + i * 10, mtime + i * 10))
     lo, hi = pdf["ts"].min(), pdf["ts"].max()
-    return lo.to_pydatetime(), hi.to_pydatetime()
-
-
-def _sentinel(src, tag, ts, order):
-    # same atomic write-then-rename as topology._sentinel: q1 is live-polling
-    pdf = pd.DataFrame(
-        {
-            "event_id": [-(order + 1)],
-            "ts": pd.Series([ts], dtype="datetime64[us]"),
-            "user_id": [-1],
-            "event_type": ["__flush__"],
-            "value": [0.0],
-            "props": [None],
-        }
-    )
-    tmp = os.path.join(src, f".zz_sentinel_{tag}.parquet.tmp")
-    pdf.to_parquet(tmp, index=False)
-    os.utime(tmp, (1_600_001_000 + order * 10,) * 2)
-    os.rename(tmp, os.path.join(src, f"zz_sentinel_{tag}.parquet"))
+    return lo.to_pydatetime(), hi.to_pydatetime(), os.stat(p).st_mtime
 
 
 def _start_topology(spark, base, src, hi, delay_secs):
     """Start the four checkpointed queries; idempotent across restarts —
     every query (q3 included, unlike the bench entry's memory sink) writes a
-    parquet sink with a checkpoint, so the whole topology is resumable."""
+    parquet sink with a checkpoint, so the whole topology is resumable.
+    q2a/q2b run the keyed-state kernels in their default hash key-group
+    layout, as warehouse_e2e/warehouse_e2e_append do, so the resumed state
+    is the production one: one row of arrays per key group."""
     dwd_page = _mkdir(base, "dwd_page")
     dwm_uv = _mkdir(base, "dwm_uv")
     dwm_uj = _mkdir(base, "dwm_uj")
@@ -176,7 +160,7 @@ def _start_topology(spark, base, src, hi, delay_secs):
 def test_topology_crash_resume_exactly_once(spark, tmp_path):
     base = str(tmp_path)
     src = _mkdir(base, "src")
-    lo, hi = _write_chunks(spark, src)
+    lo, hi, last_mtime = _write_chunks(spark, src)
     delay_secs = int((hi - lo).total_seconds()) + 1 + 700
 
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
@@ -223,10 +207,13 @@ def test_topology_crash_resume_exactly_once(spark, tmp_path):
         queries = _start_topology(spark, base, src, hi, delay_secs)
         try:
             _drain(queries, 0.3, 240.0)
-            _sentinel(src, "a_timer_flush", hi + timedelta(seconds=610), 0)
+            _write_sentinel(
+                src, "a_timer_flush", hi + timedelta(seconds=610), 0, last_mtime
+            )
             _drain(queries, 0.3, 240.0)
-            _sentinel(
-                src, "b_window_close", hi + timedelta(seconds=delay_secs + 1200), 1
+            _write_sentinel(
+                src, "b_window_close", hi + timedelta(seconds=delay_secs + 1200), 1,
+                last_mtime,
             )
             _drain(queries, 0.3, 240.0)
         finally:
