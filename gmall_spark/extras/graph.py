@@ -54,12 +54,17 @@ def _round_plan(kernel: str, round_no: int, df: DataFrame) -> None:
         ROUND_PLAN_HOOK(kernel, round_no, df)
 
 
-#: node-count ceiling for the broadcast-votes regime of the iterative kernels
-#: (LPA labels / PageRank contributions are 2 longs per node: 64M nodes is
-#: ~1 GiB of built hash relation — inside the 4g driver maxResultSize and the
-#: 8 GiB broadcast cap with margin). Above it the kernels keep the packed
-#: per-round shuffle. Env-tunable for clusters with bigger driver heaps.
-_GRAPH_BCAST_MAX_NODES = 64_000_000
+#: node-count ceiling for the broadcast-votes regime of the iterative kernels.
+#: LPA labels / PageRank contributions are 2 longs per node, 16 B raw, but
+#: the broadcast is collected through the driver as UnsafeRows (8 B null
+#: bitset + 2 × 8 B fields + a 4 B length prefix: ~28 B/node) and then built
+#: into a hash relation that stores the rows again plus its index: ~2× that.
+#: 32M nodes is therefore ~0.9 GB collected and ~1.8 GB built — inside the
+#: 4g driver maxResultSize and the 8 GiB broadcast cap with ~4× margin (the
+#: regime is validated to ~16M nodes, sf100).
+#: Above it the kernels keep the packed per-round shuffle. Env-tunable
+#: (SPARK_GRAFT_GRAPH_BCAST_NODES) for clusters with bigger driver heaps.
+_GRAPH_BCAST_MAX_NODES = 32_000_000
 
 
 def _graph_bcast_max_nodes() -> int:

@@ -948,15 +948,16 @@ def pq_train_books(
     # filter, which row-group min/max skipping turns into a pinpoint read
     # (guide §6: make pruning and pushdown do the work). Seeds are
     # bit-identical for unique ids (the table contract; with duplicate ids
-    # the old take was already tie-ambiguous).
-    seed_ids = [r[0] for r in base.select(id_col).orderBy(id_col).limit(k).collect()]
+    # the old take was already tie-ambiguous). Null ids are never seeds:
+    # ascending order puts them first, and ``isin`` can never fetch them.
+    keyed = base.where(F.col(id_col).isNotNull())
+    seed_ids = [r[0] for r in keyed.select(id_col).orderBy(id_col).limit(k).collect()]
     if not seed_ids:
         return None
     seed_pdf = (
-        base.where(F.col(id_col).isin(seed_ids)).orderBy(id_col).limit(k).toPandas()
+        keyed.where(F.col(id_col).isin(seed_ids)).orderBy(id_col).limit(k).toPandas()
     )
-    if not len(seed_pdf):
-        return None
+    assert len(seed_pdf) == len(seed_ids), (len(seed_pdf), seed_ids)
     seed_full = np.stack(seed_pdf[vec_col].to_numpy()).astype("float64")
     books = [
         seed_full[:, s * sub_dim : (s + 1) * sub_dim].copy() for s in range(m)

@@ -256,10 +256,18 @@ def _gc_scratch_spool(spool_root: str) -> None:
             pass
 
 
+def local_cpus() -> int:
+    """Local core count: SPARK_GRAFT_CPUS, else this host's os.cpu_count()."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def stream_shuffle_width() -> int:
-    """Shuffle/state-store width for KEYED-PANDAS-STATE streaming queries
-    (applyInPandasWithState / transformWithStateInPandas). Their per-batch
-    cost is the parallel Python work, so width should track cores: measured
+    """Shuffle/state-store width for single-query KEYED-PANDAS-STATE
+    registry entries (applyInPandasWithState / transformWithStateInPandas).
+    The live warehouse topology sizes its stateful queries by volume
+    (stream_volume_width) and uses this only as their cap. A single
+    entry's per-batch cost is the parallel Python work, so width should
+    track cores: measured
     solo on this 32-core box, 32 beats 8 on every pandas-state entry
     (daily-UV dedup 6.1s → 2.0s). Unlike the JVM-state family this width
     stays STATIC under input growth — the sf10 A/B
@@ -270,11 +278,7 @@ def stream_shuffle_width() -> int:
     store open+commit overhead without adding parallelism. Env-tunable
     (SPARK_GRAFT_STREAM_SHUFFLE) so a contended host can trade parallelism
     for fixed per-partition machinery without a code change."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_SHUFFLE", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-    )
+    return int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE") or local_cpus())
 
 
 #: auto-width floor — the bench-corpus optimum; see stream_jvm_state_width
@@ -289,10 +293,22 @@ _JVM_STATE_MIN_WIDTH = 8
 _JVM_STATE_BYTES_PER_PARTITION = 8 * 1024 * 1024
 
 
+def stream_volume_width(input_bytes: int) -> int:
+    """State width from source volume alone: one partition per 8 MiB of
+    input (_JVM_STATE_BYTES_PER_PARTITION), at least 1, at most
+    stream_shuffle_width(). The live warehouse topology runs its three
+    stateful queries at this width (streaming/topology.py);
+    stream_jvm_state_width raises its floor for single-query entries."""
+    return max(1, min(stream_shuffle_width(), input_bytes // _JVM_STATE_BYTES_PER_PARTITION))
+
+
 def stream_jvm_state_width(input_bytes: int | None = None) -> int:
-    """Shuffle/state width for JVM-STATE streaming queries (windowed aggs,
-    dropDuplicates, session windows, stream-stream joins) — the
-    run_to_memory/run_collect_batches DEFAULT. Their per-batch cost is
+    """Shuffle/state width for single-query JVM-STATE registry entries
+    (windowed aggs, dropDuplicates, session windows, stream-stream joins) —
+    the run_to_memory/run_collect_batches DEFAULT. The live warehouse
+    topology does not use it: its q3 window aggregate shares the cores with
+    three other queries and runs at stream_volume_width (floor 1). Their
+    per-batch cost is
     dominated by per-partition state-store machinery, not task parallelism:
     every partition's store pays open+commit per micro-batch plus a full
     scan in the watermark-eviction batch, and a stream-stream join carries
@@ -304,8 +320,8 @@ def stream_jvm_state_width(input_bytes: int | None = None) -> int:
 
     ``input_bytes`` (estimated source volume, see
     pipelines._stream_input_bytes) auto-sizes the default so a 100× input
-    doesn't need an env var: one extra partition per 8 MiB of input
-    (_JVM_STATE_BYTES_PER_PARTITION), floored at the bench-corpus optimum
+    doesn't need an env var: stream_volume_width (one partition per 8 MiB
+    of input), floored at the bench-corpus optimum
     (8: every sf≤1 source stays there, matching the committed probes) and
     capped at the cores-tracking width. The sf10 re-probe
     (BENCH_r05_sf10_streaming.json) showed narrow is 2.6-3.5x SLOWER at
@@ -318,23 +334,18 @@ def stream_jvm_state_width(input_bytes: int | None = None) -> int:
     env = os.environ.get("SPARK_GRAFT_STREAM_JVM_SHUFFLE")
     if env is not None:
         return int(env)
-    if not input_bytes:
-        return _JVM_STATE_MIN_WIDTH
-    return max(
-        _JVM_STATE_MIN_WIDTH,
-        min(stream_shuffle_width(), input_bytes // _JVM_STATE_BYTES_PER_PARTITION),
-    )
+    return max(_JVM_STATE_MIN_WIDTH, stream_volume_width(input_bytes or 0))
 
 
 def get_spark(app_name: str = "gmall_spark", master: str | None = None) -> SparkSession:
     """Build (or get) the tuned session.
 
     Env overrides (driver contract):
-      SPARK_GRAFT_CPUS — local core count (default 32)
+      SPARK_GRAFT_CPUS — local core count (default os.cpu_count())
       SPARK_GRAFT_SHUFFLE_PARTITIONS — shuffle width (default = cpus)
       SPARK_GRAFT_SCRATCH — ephemeral-IO root (default /dev/shm, see scratch_dir)
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
     # executorEnv only reaches executors on a real cluster; in local mode the
     # Python workers inherit THIS process's env, so export the BLAS pinning

@@ -362,7 +362,7 @@ def _stream_input_bytes(df: DataFrame) -> int:
     cluster's source-rate planner uses (file sizes / offset ranges) and it
     is available BEFORE the query starts — which is when the state width
     must be chosen. Unparseable/missing paths contribute 0 (the width then
-    falls back to the bench-corpus floor)."""
+    falls back to its floor)."""
     import os
     import re
 

@@ -15,7 +15,18 @@ SIMULTANEOUSLY:
     q3  DWS visitor_stats  page ∪ uv ∪ uj → per-window pv/uv/uj counts
 
 q2a/q2b keep their keyed state in hash key groups, the stateful kernels'
-default layout (see streaming/stateful.py), at every input volume.
+default layout (see streaming/stateful.py), at every input volume; the
+key-group count (4 × cores) does not depend on the partition count.
+
+Width: the three stateful queries (q2a, q2b, q3) run at ONE shuffle/state
+width, session.stream_volume_width: one partition per 8 MiB of q1's
+source, at least 1, at most the cores. The four queries share one local[cores] executor, so
+they already run in parallel with each other; each partition beyond what
+the volume needs only adds a fixed Python-runner start and a state-store
+load, commit and timeout pass to every micro-batch of its query (and q3's
+window store is re-committed per partition every trigger). The
+single-query registry entries keep session.stream_shuffle_width /
+stream_jvm_state_width, which size one query owning every core.
 
 Stage 3 aggregates in COMPLETE mode rather than watermark-append: the uj
 stream's rows lag the raw stream by up to the 600 s bounce timeout in EVENT
@@ -37,15 +48,19 @@ drains through stage 3.
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 import time
+from collections.abc import Callable
+from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
+from gmall_spark.functions import window_bounds
+from gmall_spark.session import spool_dir, stream_volume_width
 from gmall_spark.streaming.multibatch import stream_event_chunks
+from gmall_spark.streaming.pipelines import _stream_input_bytes
 from gmall_spark.streaming.stateful import dedup_daily_stream, detect_bounce_stream
 
 
@@ -243,132 +258,111 @@ def _drain(queries, trigger_secs: float, timeout_secs: float, spark=None) -> Non
         spark.streams.removeListener(watch)
 
 
-def warehouse_e2e(
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_IDLE_INTERVAL = "spark.sql.streaming.noDataProgressEventInterval"
+_PAGE_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double"
+)
+
+
+def _to_parquet(df: DataFrame, base: str, name: str, trig: dict) -> StreamingQuery:
+    return (
+        df.writeStream.format("parquet")
+        .option("path", _dir(base, name))
+        .option("checkpointLocation", _dir(base, f"ck_{name}"))
+        .outputMode("append")
+        .trigger(**trig)
+        .start()
+    )
+
+
+def _run_topology(
     spark: SparkSession,
-    sf_dir: str,
-    trigger_secs: float = 0.3,
-    timeout_secs: float = 600.0,
+    base: str,
+    source: DataFrame,
+    trigger_secs: float,
+    dws_mode: str,
+    drain: Callable[[list[StreamingQuery]], None],
+    dws_input: Callable[[DataFrame], DataFrame] = lambda u: u,
 ) -> DataFrame:
-    """Run the four-query topology to quiescence; returns the DWS result:
-    one row per 10-minute window with pv_ct / uv_ct / uj_ct."""
-    from gmall_spark.session import spool_dir
+    """Start the four queries off q1's ``source``, block in ``drain`` until
+    the caller's quiescence schedule is met, stop them, and return the DWS
+    result: one row per 10-minute window with pv_ct / uv_ct / uj_ct.
 
-    base = spool_dir("e2e_")
-    dwd_page = _dir(base, "dwd_page")
-    dwm_uv = _dir(base, "dwm_uv")
-    dwm_uj = _dir(base, "dwm_uj")
-    sink_name = f"e2e_{os.path.basename(base)}"
+    ``dws_input`` shapes the pv ∪ uv ∪ uj union before q3's window
+    aggregate, which runs in ``dws_mode``. Every query starts at the
+    stream_volume_width of ``source`` (a query captures the shuffle conf
+    at start; q1 is a stateless passthrough, so only q2a/q2b/q3 use it).
+    Both session confs are restored and every query is stopped on any
+    exit."""
+    sink_name = os.path.basename(base)
     trig = {"processingTime": f"{trigger_secs} seconds"}
-
-    from gmall_spark.session import stream_shuffle_width
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    # wide (cores-tracking) width for the DWD/DWM stages: chunked file
-    # passthrough + keyed-pandas state, both parallel-work-bound; the DWS
-    # window agg below re-pins to the narrow JVM-state width at its start
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle_width()))
+    prev = {k: spark.conf.get(k, None) for k in (_SHUFFLE, _IDLE_INTERVAL)}
+    spark.conf.set(_SHUFFLE, str(stream_volume_width(_stream_input_bytes(source))))
     # surface idle progress at trigger cadence so _drain sees quiescence when
     # it happens, not at the 10 s default throttle (see _drain docstring);
     # captured per-query at start(), so set before the first start()
-    prev_idle = spark.conf.get(
-        "spark.sql.streaming.noDataProgressEventInterval", None
-    )
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "250ms")
-    queries = []
+    spark.conf.set(_IDLE_INTERVAL, "250ms")
+    queries: list[StreamingQuery] = []
     try:
-        # q1 — DWD: chunked event source (one file per trigger), cleaned
-        # projection (BaseLogApp's parse/clean stage; our events are already
+        # q1 — DWD (BaseLogApp's parse/clean stage; our events are already
         # structured, so cleaning = typed projection)
-        ev = stream_event_chunks(spark, sf_dir, 3)
-        q1 = (
-            ev.select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", dwd_page)
-            .option("checkpointLocation", _dir(base, "ck_q1"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
+        queries.append(
+            _to_parquet(
+                source.select("event_id", "ts", "user_id", "event_type", "value"),
+                base,
+                "dwd_page",
+                trig,
+            )
         )
-        queries.append(q1)
-
-        page_schema = (
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
+        dwd_page = os.path.join(base, "dwd_page")
 
         def page_stream() -> DataFrame:
-            return spark.readStream.schema(page_schema).parquet(dwd_page)
+            return spark.readStream.schema(_PAGE_SCHEMA).parquet(dwd_page)
 
-        # q2a — DWM unique visit (UniqueVisitApp): daily firsts off the live
-        # page log
-        q2a = (
-            dedup_daily_stream(page_stream())
-            .writeStream.format("parquet")
-            .option("path", dwm_uv)
-            .option("checkpointLocation", _dir(base, "ck_q2a"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2a)
-
-        # q2b — DWM user jump (UserJumpDetailApp): CEP bounce with event-time
-        # timers off the SAME live page log
-        q2b = (
-            detect_bounce_stream(page_stream())
-            .writeStream.format("parquet")
-            .option("path", dwm_uj)
-            .option("checkpointLocation", _dir(base, "ck_q2b"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2b)
+        # q2a — DWM unique visit (UniqueVisitApp): daily firsts; q2b — DWM
+        # user jump (UserJumpDetailApp): CEP bounce with event-time timers;
+        # both off the SAME live page log
+        queries.append(_to_parquet(dedup_daily_stream(page_stream()), base, "dwm_uv", trig))
+        queries.append(_to_parquet(detect_bounce_stream(page_stream()), base, "dwm_uj", trig))
 
         # q3 — DWS visitor stats (VisitorStatsApp): union the three live
-        # layers, count per 10-minute window per metric
+        # layers, count per 10-minute window per metric; its window store
+        # runs at the same volume width as q2a/q2b
         pv = page_stream().select(F.lit("pv").alias("src"), "ts")
         uv = (
             spark.readStream.schema(
                 "user_id long, dt string, first_event_id long, first_ts timestamp"
             )
-            .parquet(dwm_uv)
+            .parquet(os.path.join(base, "dwm_uv"))
             .select(F.lit("uv").alias("src"), F.col("first_ts").alias("ts"))
         )
         uj = (
             spark.readStream.schema(
                 "event_id long, user_id long, ts timestamp, bounce_reason string"
             )
-            .parquet(dwm_uj)
+            .parquet(os.path.join(base, "dwm_uj"))
             .select(F.lit("uj").alias("src"), "ts")
         )
         stats = (
-            pv.unionByName(uv)
-            .unionByName(uj)
+            dws_input(pv.unionByName(uv).unionByName(uj))
             .groupBy(F.window("ts", "10 minutes").alias("w"))
             .agg(
-                F.sum(F.when(F.col("src") == "pv", 1).otherwise(0)).cast("long").alias("pv_ct"),
-                F.sum(F.when(F.col("src") == "uv", 1).otherwise(0)).cast("long").alias("uv_ct"),
-                F.sum(F.when(F.col("src") == "uj", 1).otherwise(0)).cast("long").alias("uj_ct"),
+                *(
+                    F.sum(F.when(F.col("src") == s, 1).otherwise(0)).cast("long").alias(f"{s}_ct")
+                    for s in ("pv", "uv", "uj")
+                )
             )
         )
-        # a query captures the shuffle conf at START: the pandas-state
-        # layers above run wide (parallel Python work), while this JVM
-        # window agg takes the narrow JVM-state width — in complete mode it
-        # re-commits every window's store each trigger, so per-partition
-        # store machinery dominates (see session.stream_jvm_state_width)
-        from gmall_spark.session import stream_jvm_state_width
-
-        spark.conf.set("spark.sql.shuffle.partitions", str(stream_jvm_state_width()))
-        q3 = (
+        queries.append(
             stats.writeStream.format("memory")
             .queryName(sink_name)
-            .outputMode("complete")
+            .outputMode(dws_mode)
             .trigger(**trig)
             .start()
         )
-        queries.append(q3)
 
-        _drain(queries, trigger_secs, timeout_secs, spark=spark)
+        drain(queries)
         for q in queries:
             q.stop()
         queries = []
@@ -378,15 +372,11 @@ def warehouse_e2e(
                 q.stop()
             except Exception:
                 pass
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if prev_idle is None:
-            spark.conf.unset("spark.sql.streaming.noDataProgressEventInterval")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.noDataProgressEventInterval", prev_idle
-            )
-
-    from gmall_spark.functions import window_bounds
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
     # spool + drop the memory sink (same reasoning as run_to_memory: don't
     # pin the result in the JVM for the rest of the session)
@@ -395,14 +385,31 @@ def warehouse_e2e(
     spool = os.path.join(base, "dws_out")
     tbl.write.mode("overwrite").parquet(spool)
     spark.catalog.dropTempView(sink_name)
-    out = spark.read.schema(schema).parquet(spool)
     stt, edt = window_bounds(F.col("w"))
-    return (
-        out.withColumn("stt", stt)
-        .withColumn("edt", edt)
-        .drop("w")
-        .select("stt", "edt", "pv_ct", "uv_ct", "uj_ct")
+    return spark.read.schema(schema).parquet(spool).select(
+        stt.alias("stt"), edt.alias("edt"), "pv_ct", "uv_ct", "uj_ct"
     )
+
+
+def warehouse_e2e(
+    spark: SparkSession,
+    sf_dir: str,
+    trigger_secs: float = 0.3,
+    timeout_secs: float = 600.0,
+) -> DataFrame:
+    """Run the four-query topology to quiescence; returns the DWS result:
+    one row per 10-minute window with pv_ct / uv_ct / uj_ct. q1 reads the
+    chunked event source (one file per trigger); q3 aggregates in complete
+    mode (see the module docstring)."""
+    return _run_topology(
+        spark,
+        spool_dir("e2e_"),
+        stream_event_chunks(spark, sf_dir, 3),
+        trigger_secs,
+        "complete",
+        lambda queries: _drain(queries, trigger_secs, timeout_secs, spark=spark),
+    )
+
 
 def warehouse_e2e_append(
     spark: SparkSession,
@@ -439,9 +446,6 @@ def warehouse_e2e_append(
     delay exceeds the range), so the memory sink holds each real window
     exactly once — duplicate emission, a window lost to lateness, or a
     missed timer flush all break the oracle counts."""
-    from datetime import timedelta
-
-    from gmall_spark.session import spool_dir, stream_jvm_state_width, stream_shuffle_width
     from gmall_spark.sources import load_table
     from gmall_spark.streaming.multibatch import chunk_events
 
@@ -454,105 +458,13 @@ def warehouse_e2e_append(
     # private copy of the chunk files: sentinels must not pollute the shared
     # chunk cache other entries stream from
     last_mtime = _copy_chunks(chunk_events(spark, sf_dir, 3), src)
-
-    dwd_page = _dir(base, "dwd_page")
-    dwm_uv = _dir(base, "dwm_uv")
-    dwm_uj = _dir(base, "dwm_uj")
-    sink_name = f"e2ea_{os.path.basename(base)}"
-    trig = {"processingTime": f"{trigger_secs} seconds"}
-    page_schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, value double"
+    source = (
+        spark.readStream.schema(_PAGE_SCHEMA + ", props string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
     )
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle_width()))
-    # idle progress at trigger cadence — this topology drains THREE times
-    # (pre-sentinel, post-A, post-B), so the 10 s default throttle would
-    # stall every cascade per layer (see _drain docstring)
-    prev_idle = spark.conf.get(
-        "spark.sql.streaming.noDataProgressEventInterval", None
-    )
-    spark.conf.set("spark.sql.streaming.noDataProgressEventInterval", "250ms")
-    queries = []
-    try:
-        ev = (
-            spark.readStream.schema(page_schema + ", props string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q1 = (
-            ev.select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", dwd_page)
-            .option("checkpointLocation", _dir(base, "ck_q1"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q1)
-
-        def page_stream() -> DataFrame:
-            return spark.readStream.schema(page_schema).parquet(dwd_page)
-
-        q2a = (
-            dedup_daily_stream(page_stream())
-            .writeStream.format("parquet")
-            .option("path", dwm_uv)
-            .option("checkpointLocation", _dir(base, "ck_q2a"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2a)
-        q2b = (
-            detect_bounce_stream(page_stream())
-            .writeStream.format("parquet")
-            .option("path", dwm_uj)
-            .option("checkpointLocation", _dir(base, "ck_q2b"))
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q2b)
-
-        pv = page_stream().select(F.lit("pv").alias("src"), "ts")
-        uv = (
-            spark.readStream.schema(
-                "user_id long, dt string, first_event_id long, first_ts timestamp"
-            )
-            .parquet(dwm_uv)
-            .select(F.lit("uv").alias("src"), F.col("first_ts").alias("ts"))
-        )
-        uj = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts timestamp, bounce_reason string"
-            )
-            .parquet(dwm_uj)
-            .select(F.lit("uj").alias("src"), "ts")
-        )
-        stats = (
-            pv.unionByName(uv)
-            .unionByName(uj)
-            # watermark FIRST (sentinel ts must drive it), filter second
-            .withWatermark("ts", f"{delay_secs} seconds")
-            .filter(F.col("ts") <= F.lit(hi))
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(
-                F.sum(F.when(F.col("src") == "pv", 1).otherwise(0)).cast("long").alias("pv_ct"),
-                F.sum(F.when(F.col("src") == "uv", 1).otherwise(0)).cast("long").alias("uv_ct"),
-                F.sum(F.when(F.col("src") == "uj", 1).otherwise(0)).cast("long").alias("uj_ct"),
-            )
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(stream_jvm_state_width()))
-        q3 = (
-            stats.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
-        queries.append(q3)
-
+    def sentinel_drains(queries: list[StreamingQuery]) -> None:
         # Sentinel A is dropped IMMEDIATELY, not after a full-topology drain:
         # it rides the SAME single channel as the real data (src —q1→
         # dwd_page —q2a/q2b→), and ordering is guaranteed end-to-end without
@@ -591,35 +503,16 @@ def warehouse_e2e_append(
         # closed window must reach the sink, and stop() below must not
         # interrupt a state-store commit anywhere in the topology
         _drain(queries, trigger_secs, max(budget - time.monotonic(), 30.0), spark=spark)
-        for q in queries:
-            q.stop()
-        queries = []
-    finally:
-        for q in queries:  # error path — don't leak running queries
-            try:
-                q.stop()
-            except Exception:
-                pass
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if prev_idle is None:
-            spark.conf.unset("spark.sql.streaming.noDataProgressEventInterval")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.noDataProgressEventInterval", prev_idle
-            )
 
-    from gmall_spark.functions import window_bounds
-
-    tbl = spark.table(sink_name)
-    schema = tbl.schema
-    spool = os.path.join(base, "dws_out")
-    tbl.write.mode("overwrite").parquet(spool)
-    spark.catalog.dropTempView(sink_name)
-    out = spark.read.schema(schema).parquet(spool)
-    stt, edt = window_bounds(F.col("w"))
-    return (
-        out.withColumn("stt", stt)
-        .withColumn("edt", edt)
-        .drop("w")
-        .select("stt", "edt", "pv_ct", "uv_ct", "uj_ct")
+    return _run_topology(
+        spark,
+        base,
+        source,
+        trigger_secs,
+        "append",
+        sentinel_drains,
+        # watermark FIRST (sentinel ts must drive it), filter second
+        lambda u: u.withWatermark("ts", f"{delay_secs} seconds").filter(
+            F.col("ts") <= F.lit(hi)
+        ),
     )

@@ -219,6 +219,19 @@ def test_pq_combined_trainer_bitexact(spark):
         )
 
 
+def test_pq_seeds_skip_null_ids(spark):
+    """A null id sorts first in the top-k seed pass but can never be fetched
+    by ``id IN (...)``; it must not cost the trainer one of its k seeds."""
+    from gmall_spark.extras import similarity
+
+    rows = [(None, [9.0, 9.0, 9.0, 9.0])] + [
+        (i, [float(i), 0.0, 0.0, float(-i)]) for i in range(1, 7)
+    ]
+    df = spark.createDataFrame(rows, "id long, vec array<float>")
+    books = similarity.pq_train_books(df, "id", "vec", m=2, k=3, iters=1, sub_dim=2)
+    assert [len(b) for b in books] == [3, 3]
+
+
 def test_pq_encode_accepts_pretrained_books(spark):
     """pq_encode(books=...) must emit the identical codes to its own
     training path (the pq_ann share contract)."""

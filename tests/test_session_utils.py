@@ -95,3 +95,13 @@ def test_gc_deletes_expired_untagged_entries(tmp_path):
     stale = _make_entry(root, "landing_old", sess._SPOOL_TTL_SECS + 60)
     _run_gc(root)
     assert not os.path.exists(stale)
+
+
+def test_cpus_fall_back_to_host_core_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    assert sess.local_cpus() == os.cpu_count()
+    assert sess.stream_shuffle_width() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert sess.local_cpus() == 3
+    assert sess.stream_shuffle_width() == 3

@@ -17,8 +17,10 @@ DataFrame PRE-start and asserts on its ANALYZED logical plan:
 - the state width the entry runs at is the reviewed knob:
   ``jvm`` = session.stream_jvm_state_width() (per-partition store
   open+commit dominates), ``pandas`` = session.stream_shuffle_width()
-  (parallel Python work dominates), ``session`` = inherits the session
-  conf (direct-writeStream entries that pin nothing).
+  (parallel Python work dominates), ``topology`` =
+  session.stream_volume_width of the entry's source volume (the four-query
+  topologies, whose queries share the cores), ``session`` = inherits the
+  session conf (direct-writeStream entries that pin nothing).
 
 The table was generated from the r5 capture and hand-reviewed; it is a
 snapshot on purpose — plan drift in ANY streaming entry fails here first.
@@ -144,9 +146,9 @@ EXPECTED: dict[str, tuple[dict[str, int], str]] = {
     ),
     "streaming_visitor_stats": ({"EventTimeWatermark": 1, "Aggregate": 1}, "jvm"),
     # first stage of the 4-query DWD->DWM->DWS topology: stateless filter,
-    # started at the topology's pinned width (== cores)
-    "streaming_warehouse_e2e": ({}, "pandas"),
-    "streaming_warehouse_e2e_append": ({}, "pandas"),
+    # started at the one width the topology pins for all its queries
+    "streaming_warehouse_e2e": ({}, "topology"),
+    "streaming_warehouse_e2e_append": ({}, "topology"),
 }
 
 _SENTINEL_WIDTH = "7"  # never equals either knob; detects 'inherits session'
@@ -191,7 +193,12 @@ def test_expected_table_covers_every_streaming_entry():
 
 @pytest.mark.parametrize("name", sorted(EXPECTED))
 def test_streaming_entry_plan_fingerprint(spark, name):
-    from gmall_spark.session import stream_jvm_state_width, stream_shuffle_width
+    from gmall_spark.session import (
+        stream_jvm_state_width,
+        stream_shuffle_width,
+        stream_volume_width,
+    )
+    from gmall_spark.streaming.pipelines import _stream_input_bytes
 
     df, width = _capture(spark, name)
     assert df.isStreaming, f"{name}: captured frame is not a streaming plan"
@@ -209,6 +216,7 @@ def test_streaming_entry_plan_fingerprint(spark, name):
     knob_widths = {
         "jvm": str(stream_jvm_state_width()),
         "pandas": str(stream_shuffle_width()),
+        "topology": str(stream_volume_width(_stream_input_bytes(df))),
         "session": _SENTINEL_WIDTH,
     }
     assert width == knob_widths[want_knob], (
